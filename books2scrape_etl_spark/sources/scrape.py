@@ -13,8 +13,9 @@ The Spark-native design decomposes that into relational stages over a
 2. S1 ``fetch`` — ``mapInPandas`` over URL partitions; one HTTP session
    per partition (connection reuse), optional per-partition throttle
    (politeness — the site, not Spark, is the bottleneck at scale;
-   SURVEY.md §7.4.5). Fetch is separated from parse so re-parsing
-   cached HTML is free.
+   SURVEY.md §7.4.5). Every action over an unstaged frame re-runs
+   its fetch; ``plans.books.transform_books`` stages the parsed frame,
+   so a live scrape is fetched (and parsed) once per ETL run.
 3. S3 ``extract_links`` — listing HTML -> array of detail URLs ->
    ``explode`` (the 1->N fan-out the reference does with a Python loop,
    extract_pipeline.py:57-73).

@@ -105,3 +105,31 @@ def test_clean_currency_idempotent(spark):
     df = books_raw_df(spark).select(clean_currency(PRICE_EXCL).alias("once"))
     twice = df.select(clean_currency(F.col("once")).alias("twice"))
     assert [r["twice"] for r in twice.collect()] == [r["once"] for r in df.collect()]
+
+
+def test_books_run_parses_each_page_once(spark, tmp_path):
+    """One ETL run (transform, the 5 parquet sinks, the report) reads
+    the HTML source once: the parsed frame is staged in
+    ``transform_books``, so the probes, sinks and report do not re-run
+    the source and its Python parse per action."""
+    from books2scrape_etl_spark.io import write_parquet
+    from books2scrape_etl_spark.plans.report import run_report
+    from books2scrape_etl_spark.sources.fixtures_html import DETAIL_PAGES
+    from books2scrape_etl_spark.sources.scrape import html_source, parse_books
+
+    pages_read = spark.sparkContext.accumulator(0)
+
+    def count_pages(batches):
+        for pdf in batches:
+            pages_read.add(len(pdf))
+            yield pdf
+
+    pages = html_source(spark, DETAIL_PAGES).mapInPandas(
+        count_pages, "url string, html string"
+    )
+    cleaned, dims, fact = transform_books(parse_books(pages))
+    for name, dim in dims.items():
+        write_parquet(dim, str(tmp_path / name))
+    write_parquet(fact, str(tmp_path / "fact"))
+    assert run_report(cleaned)["total_books"] == len(DETAIL_PAGES)
+    assert pages_read.value == len(DETAIL_PAGES)

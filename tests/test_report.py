@@ -46,6 +46,16 @@ def test_run_report_end_to_end(spark, monkeypatch):
     assert summary["total_books"] > 0
 
 
+def test_run_report_empty_raises(spark, monkeypatch):
+    monkeypatch.delenv("SMTP_HOST", raising=False)
+    from books2scrape_etl_spark.io import BOOKS_RAW_SCHEMA
+    from books2scrape_etl_spark.plans.books import clean_books
+
+    empty = spark.createDataFrame([], BOOKS_RAW_SCHEMA)
+    with pytest.raises(ValueError):
+        run_report(clean_books(empty))
+
+
 def test_observed_pipeline_metrics(spark):
     from books2scrape_etl_spark.plans.books import clean_books
     from books2scrape_etl_spark.plans.report import observed_pipeline

@@ -243,27 +243,52 @@ def test_topk_per_group_scale_prunes_before_exchange(spark):
 def test_stage_persist_generations(spark):
     """Staging caches are generation-scoped (VERDICT r12 item 4): a
     second execution of the same operator retires the first one's
-    persisted frame instead of accumulating CacheManager entries."""
+    persisted frame instead of accumulating CacheManager entries —
+    for the scale operators and for the books ETL's staged input."""
+    from books2scrape_etl_spark.io import BOOKS_RAW_SCHEMA
     from books2scrape_etl_spark.operators.scale import (
         _STAGE_GENERATIONS,
         dense_ids_scale,
     )
+    from books2scrape_etl_spark.plans.books import transform_books
+    from tests.fixtures import BOOKS_RAW_ROWS
 
     # distinct inputs per generation: storageLevel resolves through the
     # CacheManager by PLAN, so identical plans would answer for each
     # other and hide the retirement
     df1 = spark.createDataFrame([(i % 13,) for i in range(200)], "k int")
     df2 = spark.createDataFrame([(i % 17,) for i in range(200)], "k int")
-    first = dense_ids_scale(df1, ["k"], "id", num_partitions=3)
-    gen1 = _STAGE_GENERATIONS["dense_ids_scale"]
-    assert gen1.storageLevel.useMemory
-    second = dense_ids_scale(df2, ["k"], "id", num_partitions=3)
-    gen2 = _STAGE_GENERATIONS["dense_ids_scale"]
-    assert gen2 is not gen1
-    assert not gen1.storageLevel.useMemory  # previous generation retired
-    # and both plans still evaluate correctly (recompute is value-safe)
-    assert sorted(r.id for r in first.collect()) == list(range(1, 14))
-    assert sorted(r.id for r in second.collect()) == list(range(1, 18))
+    raw1 = spark.createDataFrame(BOOKS_RAW_ROWS, BOOKS_RAW_SCHEMA)
+    raw2 = spark.createDataFrame(BOOKS_RAW_ROWS[:5], BOOKS_RAW_SCHEMA)
+    cases = [
+        (
+            "dense_ids_scale",
+            lambda df: dense_ids_scale(df, ["k"], "id", num_partitions=3),
+            df1,
+            df2,
+            lambda out: sorted(r.id for r in out.collect()),
+            (list(range(1, 14)), list(range(1, 18))),
+        ),
+        (
+            "books.raw",
+            lambda raw: transform_books(raw)[2],
+            raw1,
+            raw2,
+            lambda fact: fact.count(),
+            (len(BOOKS_RAW_ROWS), 5),
+        ),
+    ]
+    for slot, build, in1, in2, result, want in cases:
+        first = build(in1)
+        gen1 = _STAGE_GENERATIONS[slot]
+        assert gen1.storageLevel.useMemory, slot
+        second = build(in2)
+        gen2 = _STAGE_GENERATIONS[slot]
+        assert gen2 is not gen1, slot
+        assert gen2.storageLevel.useMemory, slot  # one live generation
+        assert not gen1.storageLevel.useMemory, slot  # previous one retired
+        # and both plans still evaluate correctly (recompute is value-safe)
+        assert (result(first), result(second)) == want, slot
 
 
 def test_percent_rank_scale_single_row_group(spark):
