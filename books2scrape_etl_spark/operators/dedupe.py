@@ -39,6 +39,11 @@ from books2scrape_etl_spark.functions.util import to_col
 
 from books2scrape_etl_spark.operators.text import normalize_for_fingerprint
 
+# MinHash shape: word n-gram size of the shingle sets, and K = bands *
+# rows signature length (solve_bands factors K per threshold).
+SHINGLE_N = 3
+NUM_HASHES = 16
+
 
 def _words(col: Column | str) -> Column:
     c = to_col(col)
@@ -110,34 +115,22 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def minhash_bands(
-    docs: DataFrame,
-    text_col: str = "text",
-    bands: int = 8,
-    rows: int = 2,
-    shingle_n: int = 3,
-    shingles_df: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, band, band_sig): LSH bucketing table. Docs sharing
-    (band, band_sig) are candidate near-duplicates.
+def minhash_bands(sh: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc_id, band, band_sig): LSH bucketing table over a (persisted)
+    shingle table ``sh`` (doc_id, shingles). Docs sharing (band,
+    band_sig) are candidate near-duplicates.
 
-    Pass a (persisted) ``shingles_df`` (doc_id, shingles) to keep the
-    normalize/shingle pipeline from being re-inlined into the K hash
-    transforms — at scale this staging table is the natural checkpoint
-    (write once, reuse for banding AND verification)."""
-    k = bands * rows
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles"))
-    )
-    # Empty-shingle docs (shorter than shingle_n words) never band: they
+    The shingle table is taken staged, not rebuilt here: otherwise the
+    normalize/shingle pipeline re-inlines into the K hash transforms —
+    at scale it is the natural checkpoint (write once, reuse for
+    banding AND verification)."""
+    # Empty-shingle docs (shorter than SHINGLE_N words) never band: they
     # carry no similarity evidence, so they are unconditional survivors.
     # Without this filter they all hash to the same '' band signature —
     # a single O(n_short^2) self-join bucket (skew bomb) that then
     # "verifies" via the empty-vs-empty Jaccard corner.
     sig_df = sh.where(F.size("shingles") > 0).select(
-        "doc_id", minhash_signature(F.col("shingles"), k).alias("sig")
+        "doc_id", minhash_signature(F.col("shingles"), bands * rows).alias("sig")
     )
     band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
     return (
@@ -167,7 +160,7 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
 
 
-def solve_bands(threshold: float, num_hashes: int = 16) -> tuple[int, int]:
+def solve_bands(threshold: float, num_hashes: int = NUM_HASHES) -> tuple[int, int]:
     """Choose (bands, rows) with bands*rows == num_hashes whose LSH
     S-curve midpoint (1/b)^(1/r) sits closest to ``threshold``.
 
@@ -188,75 +181,11 @@ def solve_bands(threshold: float, num_hashes: int = 16) -> tuple[int, int]:
     return best[1], best[2]
 
 
-def minhash_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.7,
-    bands: int | None = None,
-    rows: int | None = None,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """L2 — near-dup removal. Returns surviving (doc_id, text).
-
-    candidates = self-join on LSH band buckets (id_small < id_big);
-    verified = exact Jaccard on shingle sets >= threshold;
-    survivors = docs with NO verified neighbor of smaller doc_id.
-
-    (bands, rows) default to :func:`solve_bands`(threshold, num_hashes)
-    — the S-curve midpoint tracks the threshold, so a t=0.8 run prunes
-    far more candidates than a t=0.5 run instead of both using one
-    hardcoded banding. Pass both explicitly to override.
-    """
-    if bands is None or rows is None:
-        bands, rows = solve_bands(threshold, num_hashes)
-    from books2scrape_etl_spark.operators.scale import stage_persist
-
-    # persist the shingle staging table: reused by the K hash transforms
-    # AND the Jaccard verification; without it the normalize+shingle
-    # expression re-inlines into every consumer. Generation-scoped
-    # (VERDICT r12 item 4): a re-execution retires the previous run's
-    # cache entries instead of accumulating them — value-safe, the
-    # whole pipeline is deterministic.
-    sh = stage_persist(
-        "dedupe.minhash.sh",
-        docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles")),
-    )
-    # persist the bands table: it feeds both sides of the self-join
-    b = stage_persist(
-        "dedupe.minhash.b",
-        minhash_bands(docs, text_col, bands, rows, shingle_n, shingles_df=sh),
-    )
-    left = b.alias("l")
-    right = b.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sha = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    shb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    verified = (
-        cand.join(sha, "id_a")
-        .join(shb, "id_b")
-        .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
-        .select("id_b")
-        .distinct()
-    )
-    # Deliberately NOT materialize-then-unpersist (the embed_generate /
-    # verified_similar_pairs rule applies to caches a returned plan
-    # does NOT need): here the staging caches are load-bearing parts of
-    # the returned plan — every re-execution reuses them (measured: the
-    # eager-checkpoint variant costs ~1.5x warm on the graded headline),
-    # and they are reclaimed by ContextCleaner like any DataFrame cache
-    # once the consumer drops the plan. Callers that want the staging
-    # dropped eagerly should use verified_similar_pairs(materialize=True)
-    # + their own anti-join.
+def minhash_dedup(docs: DataFrame, text_col: str = "text", threshold: float = 0.7) -> DataFrame:
+    """L2 — near-dup removal. Returns surviving (doc_id, text): docs
+    with NO verified neighbor of smaller doc_id among
+    :func:`verified_similar_pairs`."""
+    verified = verified_similar_pairs(docs, text_col, threshold).select("id_b").distinct()
     return docs.join(verified, docs["doc_id"] == verified["id_b"], "left_anti")
 
 
@@ -342,19 +271,23 @@ def simhash_bands(
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_val").alias("band_val"))
 
 
+def _with_shingles(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, sh_a, sh_b): each (id_a, id_b) pair joined to both
+    docs' shingle sets from ``sh`` (doc_id, shingles)."""
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    return pairs.join(a, "id_a").join(b, "id_b")
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame, pairs: DataFrame, text_col: str = "text", shingle_n: int = 3
+    docs: DataFrame, pairs: DataFrame, text_col: str = "text", shingle_n: int = SHINGLE_N
 ) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit (id_a, id_b) pair list —
-    the verification kernel shared by the LSH paths, usable standalone
-    when candidates come from elsewhere (same-source, same-length-bucket)."""
-    sh = docs.select("doc_id", word_shingles(text_col, shingle_n).alias("sh"))
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"))
+    """Exact n-gram Jaccard for an explicit (id_a, id_b) pair list, for
+    candidates that come from elsewhere (same-source, same-length-
+    bucket). Shares its shingle join with :func:`verified_similar_pairs`."""
+    sh = docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles"))
+    return _with_shingles(pairs, sh).select(
+        "id_a", "id_b", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard")
     )
 
 
@@ -369,8 +302,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     hop per round, so convergence is O(graph diameter) rounds — fine
     for near-dup graphs (components are dense clusters of copies, with
     tiny diameters), but an adversarial length-D chain needs D rounds.
-    (The logarithmic-round alternative is large-star/small-star
-    contraction [Kiveris et al. 2014]; not needed at dedup diameters.)
+    (The logarithmic-round alternative, large-star/small-star
+    contraction [Kiveris et al. 2014], is
+    :func:`connected_components_star` below — for long-chain graphs.)
     If ``max_iter`` is exhausted before fixpoint, a warning is emitted —
     labels would be silently wrong otherwise. Each generation is
     ``localCheckpoint``-ed, not merely persisted: caching keeps the
@@ -564,37 +498,40 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
 
 
 def verified_similar_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.7,
-    bands: int | None = None,
-    rows: int | None = None,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    materialize: bool = True,
+    docs: DataFrame, text_col: str = "text", threshold: float = 0.7
 ) -> DataFrame:
-    """Verified-similar edge list (id_a < id_b): the LSH band equi-join
-    proposes candidates, exact shingle Jaccard >= ``threshold`` verifies
-    them. This is the shared front half of the component-exact dedup
-    paths — exposed so callers can run several CC algorithms (or other
-    graph consumers) over ONE candidate-generation pass instead of
-    paying the minhash stage per consumer.
+    """Verified-similar edge list (id_a < id_b), lazily: the LSH band
+    equi-join proposes candidates, exact shingle Jaccard >= ``threshold``
+    verifies them. The one candidate+verify path — :func:`minhash_dedup`
+    anti-joins its ``id_b`` side, :func:`minhash_dedup_cc` and graph
+    consumers read the edges.
 
-    ``materialize=True`` (the default) eagerly pins the (tiny)
-    verified edge list via localCheckpoint and UNPERSISTS the
-    shingle/band intermediates it was built from. Long-lived sessions
-    that run many operators back-to-back (the full-registry sweep: 297
-    in one local-mode JVM) otherwise accumulate those storage blocks
-    in the same heap that builds broadcast hash tables — measured
-    r9c3 as a broadcast-build OOM 222 qnames into the sf0.1 sweep.
-    ``materialize=False`` returns the lazy plan WITH the shingle/band
-    caches still pinned and no handle to release them — only for
-    callers that consume the plan immediately in a short-lived
-    session and accept the leak."""
-    if bands is None or rows is None:
-        bands, rows = solve_bands(threshold, num_hashes)
-    sh = docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles")).persist()
-    b = minhash_bands(docs, text_col, bands, rows, shingle_n, shingles_df=sh).persist()
+    (bands, rows) come from :func:`solve_bands`(threshold, NUM_HASHES):
+    the S-curve midpoint tracks the threshold, so a t=0.8 run prunes
+    far more candidates than a t=0.5 run instead of both using one
+    hardcoded banding."""
+    from books2scrape_etl_spark.operators.scale import stage_persist
+
+    bands, rows = solve_bands(threshold)
+    # persist the shingle staging table: reused by the K hash transforms
+    # AND the Jaccard verification; without it the normalize+shingle
+    # expression re-inlines into every consumer. Generation-scoped
+    # (VERDICT r12 item 4): a re-execution retires the previous run's
+    # cache entries instead of accumulating them — value-safe, the
+    # whole pipeline is deterministic.
+    sh = stage_persist(
+        "dedupe.minhash.sh",
+        docs.select("doc_id", word_shingles(text_col, SHINGLE_N).alias("shingles")),
+    )
+    # persist the bands table: it feeds both sides of the self-join
+    b = stage_persist("dedupe.minhash.b", minhash_bands(sh, bands, rows))
+    # Deliberately NOT materialize-then-unpersist (the embed_generate
+    # rule applies to caches a returned plan does NOT need): the staging
+    # caches are load-bearing parts of the returned plan — every
+    # re-execution reuses them (measured: the eager-checkpoint variant
+    # costs ~1.5x warm on the graded headline), and the slots bound
+    # them to one live generation each. Callers that read the edges
+    # more than once pin them themselves (dedup_cc_star).
     left, right = b.alias("l"), b.alias("r")
     cand = (
         left.join(
@@ -606,31 +543,15 @@ def verified_similar_pairs(
         .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
         .distinct()
     )
-    sha = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    shb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    pairs = (
-        cand.join(sha, "id_a")
-        .join(shb, "id_b")
+    return (
+        _with_shingles(cand, sh)
         .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
         .select("id_a", "id_b")
     )
-    if materialize:
-        out = pairs.localCheckpoint(eager=True)
-        sh.unpersist()
-        b.unpersist()
-        return out
-    return pairs
 
 
 def minhash_dedup_cc(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.7,
-    bands: int | None = None,
-    rows: int | None = None,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    algorithm: str = "propagation",
+    docs: DataFrame, text_col: str = "text", threshold: float = 0.7
 ) -> DataFrame:
     """L2 (exact grouping variant) — near-dup removal keeping exactly one
     doc per connected component of the verified-similar graph.
@@ -638,23 +559,12 @@ def minhash_dedup_cc(
     Differs from :func:`minhash_dedup`'s single-pass survivor rule on
     chains: for A~B~C (A!~C), the single-pass rule drops B and C; the
     component rule keeps only min(A,B,C)=A. Costs extra iteration
-    rounds — the price of exact transitive grouping.
-
-    ``algorithm``: ``"propagation"`` (default, O(diameter) rounds, one
-    join+agg per round) or ``"star"`` (large-star/small-star, O(log)
-    rounds — for long-chain similarity graphs).
+    rounds — the price of exact transitive grouping. Components come
+    from :func:`connected_components` (min-label propagation), which
+    persists its own symmetrised edge list before iterating, so the
+    pairs go in lazily.
     """
-    # materialize=True: the CC stage consumes the edge list eagerly
-    # anyway (iteration rounds run at call time) and the returned plan
-    # references only the checkpointed component labels, so the
-    # shingle/band intermediates can be dropped here instead of leaking
-    # into the caller's session.
-    verified_pairs = verified_similar_pairs(
-        docs, text_col, threshold, bands, rows, shingle_n, num_hashes,
-        materialize=True,
-    )
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comp = cc(verified_pairs)
+    comp = connected_components(verified_similar_pairs(docs, text_col, threshold))
     dupes = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
     return docs.join(dupes, "doc_id", "left_anti")
 

@@ -268,7 +268,8 @@ def q_wave30_32_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # minhash signatures, not SQL-computable), but the CC *algorithms*
 # themselves are deterministic graph ops — so run BOTH implementations
 # (large-star/small-star contraction AND min-label propagation,
-# operators/dedupe.py:328,404) over a deterministic, SQL-expressible
+# operators/dedupe.py connected_components_star /
+# connected_components) over a deterministic, SQL-expressible
 # edge set (the winnowing candidate graph, operators/winnow.py:178,
 # whose oracle already exists for winnow_candidates) and compare
 # component labels value-exactly against an independent DuckDB
@@ -337,8 +338,9 @@ FROM cand
 @register("cc_exact", _CC_EXACT_SQL)
 def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-exact differential for BOTH connected-components
-    implementations (operators/dedupe.py: min-label propagation :328,
-    large-star/small-star contraction :404) on the deterministic
+    implementations (operators/dedupe.py: min-label propagation in
+    connected_components, large-star/small-star contraction in
+    connected_components_star) on the deterministic
     winnowing candidate graph. The oracle recomputes components as a
     recursive-CTE transitive min-label closure in DuckDB — a third,
     independent implementation — so any wrong merge or split in either

@@ -508,10 +508,10 @@ def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from books2scrape_etl_spark.operators import dedupe
 
     docs = read_table(spark, "documents", sf_dir)
-    # materialize=True pins the edge list once (localCheckpoint) and
-    # unpersists the shingle/band intermediates — both CC algorithms
-    # then read the same materialized blocks
-    pairs = dedupe.verified_similar_pairs(docs, threshold=0.6, materialize=True)
+    # pin the lazy edge list once (localCheckpoint): both CC algorithms
+    # read it, and each would otherwise re-run the candidate join and
+    # the Jaccard verification over the staged shingle/band slots
+    pairs = dedupe.verified_similar_pairs(docs, threshold=0.6).localCheckpoint(eager=True)
     comp_star = dedupe.connected_components_star(pairs)
     comp_prop = dedupe.connected_components(pairs)
     lab = comp_star.select(
@@ -532,7 +532,7 @@ def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_anti",
     ).select("doc_id")
     elig = docs.where(
-        F.size(dedupe.word_shingles("text", 3)) > 0
+        F.size(dedupe.word_shingles("text", dedupe.SHINGLE_N)) > 0
     ).select("doc_id", F.md5("text").alias("fp"))
     grp = elig.groupBy("fp").agg(F.count(F.lit(1)).alias("n_members"))
     surv_per_fp = (
@@ -1334,8 +1334,9 @@ def q_embed_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forward-pass blocks BEFORE returning: the returned plan must not
     # depend on `emb`, or every call leaks storage in long-lived
     # sessions (the r9c3 broadcast-build OOM class; the real driver
-    # harness never clears cache). Same materialize-then-unpersist
-    # pattern as dedupe.verified_similar_pairs.
+    # harness never clears cache). The inverse case is
+    # dedupe.verified_similar_pairs, whose staging caches are part of
+    # its returned plan and so stay held, one generation per slot.
     out = (
         _check_row("ids_bijective_with_documents", n(bad_ids))
         .union(_check_row("unit_or_zero_norms", n(bad_norm)))

@@ -74,6 +74,28 @@ def test_minhash_dedup_removes_near_duplicates(spark):
     assert 2 not in survivors  # near-dup of 1, larger id -> removed
 
 
+def test_verified_pairs_keep_minhash_staging_cached(spark, sf_dir):
+    """minhash_dedup and verified_similar_pairs share one staging
+    lifecycle: a pairs call over the same docs re-stages the same
+    plans, so it must leave the dedup's shingle/band slots cached: the
+    CacheManager matches by plan, so a second lifecycle's unpersist
+    would evict them."""
+    from books2scrape_etl_spark.operators.scale import _STAGE_GENERATIONS
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    survivors = dedupe.minhash_dedup(docs, threshold=0.6)
+    n_survivors = survivors.count()
+    pairs = dedupe.verified_similar_pairs(docs, threshold=0.6)
+    dup_ids = {r.id_b for r in pairs.select("id_b").distinct().collect()}
+    for slot in ("dedupe.minhash.sh", "dedupe.minhash.b"):
+        assert _STAGE_GENERATIONS[slot].storageLevel.useMemory, slot
+    all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
+    got = {r.doc_id for r in survivors.select("doc_id").collect()}
+    assert dup_ids  # the corpus plants near-duplicates
+    assert len(got) == n_survivors
+    assert got == all_ids - dup_ids
+
+
 def test_jaccard_kernel(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "a b c d e"), (3, "z y x w v")],

@@ -244,8 +244,10 @@ def test_stage_persist_generations(spark):
     """Staging caches are generation-scoped (VERDICT r12 item 4): a
     second execution of the same operator retires the first one's
     persisted frame instead of accumulating CacheManager entries —
-    for the scale operators and for the books ETL's staged input."""
+    for the scale operators, the books ETL's staged input and the
+    MinHash shingle table."""
     from books2scrape_etl_spark.io import BOOKS_RAW_SCHEMA
+    from books2scrape_etl_spark.operators.dedupe import minhash_dedup
     from books2scrape_etl_spark.operators.scale import (
         _STAGE_GENERATIONS,
         dense_ids_scale,
@@ -260,6 +262,15 @@ def test_stage_persist_generations(spark):
     df2 = spark.createDataFrame([(i % 17,) for i in range(200)], "k int")
     raw1 = spark.createDataFrame(BOOKS_RAW_ROWS, BOOKS_RAW_SCHEMA)
     raw2 = spark.createDataFrame(BOOKS_RAW_ROWS[:5], BOOKS_RAW_SCHEMA)
+    base = "the quick brown fox jumps over the lazy dog again and again every day"
+    far = "completely unrelated content about spark query engines and shuffles"
+    docs1 = spark.createDataFrame(
+        [(1, base), (2, base + " extra"), (3, far)], "doc_id long, text string"
+    )
+    docs2 = spark.createDataFrame(
+        [(1, base), (2, far), (3, "a third text about nothing in particular at all")],
+        "doc_id long, text string",
+    )
     cases = [
         (
             "dense_ids_scale",
@@ -276,6 +287,14 @@ def test_stage_persist_generations(spark):
             raw2,
             lambda fact: fact.count(),
             (len(BOOKS_RAW_ROWS), 5),
+        ),
+        (
+            "dedupe.minhash.sh",
+            lambda docs: minhash_dedup(docs, threshold=0.6),
+            docs1,
+            docs2,
+            lambda survivors: survivors.count(),
+            (2, 3),
         ),
     ]
     for slot, build, in1, in2, result, want in cases:
